@@ -18,6 +18,7 @@ owes the agent is:
 
 from __future__ import annotations
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 from boxoffice_spark.tables import describe_tables, register_views
@@ -88,7 +89,23 @@ def validate_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     This is plan-shape validation, not row-limit sandboxing: it uses the
     same ``explain`` text the engine's own regression tests assert on
     (tests/test_plans.py), so the guard can't drift from the executor.
+
+    ``spark.sql`` runs commands (DDL, CACHE, SET, INSERT, scripts)
+    eagerly, so the text is first parsed with the session's own parser —
+    no analysis, no Spark job — and anything that is not a single query
+    is refused before ``spark.sql`` ever sees it. Text that is not valid
+    SQL at all raises the parser's own ``ParseException``.
     """
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        # spark.sql accepts a trailing ';', the single-query rule does not
+        parser.parseQuery(sql.strip().rstrip(";"))
+    except ParseException:
+        parser.parsePlan(sql)  # not valid SQL at all: raise the parse error
+        raise UnsafePlanError(
+            "generated SQL is not a query; only SELECT-style statements "
+            "may run through the agent surface"
+        ) from None
     df = run_sql(spark, sf_dir, sql)
     plan = df._jdf.queryExecution().executedPlan().toString()
     for op in ("CartesianProduct", "BroadcastNestedLoopJoin"):

@@ -30,12 +30,16 @@ def scoped_persist(df: DataFrame, scope: str) -> DataFrame:
     benchmark warm runs); evicting a cache only to rebuild the identical
     one would throw that warm state away. Non-blocking unpersist: in-flight
     jobs that still reference the old cache recompute missing blocks
-    instead of failing."""
+    instead of failing. A kept handle whose cache was dropped behind its
+    back (``spark.catalog.clearCache()``) stores nowhere any more, so it
+    is persisted afresh instead of being returned stale."""
     prev = _SCOPED.get(scope)
     if prev is not None:
         try:
             if prev.sparkSession is df.sparkSession and prev.sameSemantics(df):
-                return prev
+                level = prev.storageLevel
+                if level.useMemory or level.useDisk:
+                    return prev
             prev.unpersist(blocking=False)
         except Exception:
             pass  # session of the previous handle may already be stopped

@@ -9,13 +9,14 @@ Four tiers, weakest-to-strongest guarantee, cheapest-to-dearest at 100 TB:
 2. ``ngram_jaccard_pairs`` — blocked pairwise word-3-gram Jaccard. Exact
    similarity, but O(block²); keep blocks bounded (here: (lang, source)).
 3. ``simhash`` — 60-bit locality-sensitive fingerprint; near-dups collide
-   in Hamming space. One shuffle, constant per-doc output.
+   in Hamming space. Map-side Arrow kernel: zero shuffle, one row per doc.
 4. ``minhash_lsh_pairs`` — MinHash + banded LSH via Spark ML; sub-quadratic
    candidate generation, the scale path for corpus-level near-dup removal.
 
-Tiers 1-3 are expressed in pure Catalyst expressions (oracle-checkable
-bit-for-bit against DuckDB); tier 4 is approximate by construction
-(rows-only check).
+Tiers 1-2 are expressed in pure Catalyst expressions and tier 3 in a
+Python kernel sharing their normalization + md5 recipe — all three
+oracle-checkable bit-for-bit against DuckDB; tier 4 is approximate by
+construction (rows-only check).
 """
 
 from __future__ import annotations
@@ -401,33 +402,52 @@ def word_ngram_hashes_fast(
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
-    """Tier 3: SimHash fingerprint (Charikar) over word hashes.
+    """Tier 3: SimHash fingerprint (Charikar) over word hashes, map-side
+    via mapInPandas.
 
-    Explode words -> per-bit signed vote -> majority -> reassemble. The
-    per-bit votes are ``bits`` aggregate expressions over one exploded
-    shuffle — all codegen, no Python. At true scale a Pandas-UDF map-side
-    simhash (one pass, no explode) wins on shuffle volume; this form is the
-    oracle-exact reference implementation.
+    Each doc's fingerprint is computed inside its scan partition in a
+    single Arrow batch pass — zero shuffle, one row per doc (an explode
+    form would shuffle one row per WORD into a ``bits``-aggregate
+    groupBy). Bit semantics: md5-derived word hashes (the shared
+    :func:`_norm_words_py` / :func:`_hash60_py` parity recipe), each
+    occurrence votes, tie -> 0 — bit-exact against the DuckDB oracle
+    :func:`simhash_sql`. A NULL text drops the doc, as the oracle's
+    unnest of a NULL word list does. One row per input row, so ids must
+    be unique (the oracle groups by id).
     """
-    words = spread(df).select(
-        F.col(id_col), F.explode(F.split(normalized_text(text_col), " ")).alias("_w")
-    ).withColumn("_h", _word_hash(F.col("_w")))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("_h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"_v{j}")
-        for j in range(bits)
-    ]
-    voted = words.groupBy(id_col).agg(*votes)
-    sh = None
-    for j in range(bits):
-        bit = F.when(F.col(f"_v{j}") > 0, F.lit(1).cast("long") * (1 << j)).otherwise(0)
-        sh = bit if sh is None else sh + bit
-    return voted.select(F.col(id_col), sh.alias("simhash"))
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pandas as pd
+
+    shifts = np.arange(bits, dtype=np.uint64)
+
+    def one(text: str) -> int:
+        hs = np.fromiter(
+            (_hash60_py(w) for w in _norm_words_py(text)),
+            dtype=np.uint64,
+        )
+        votes = (((hs[:, None] >> shifts) & 1).astype(np.int64) * 2 - 1).sum(axis=0)
+        return int(((votes > 0).astype(np.uint64) << shifts).sum())
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                (i, one(t))
+                for i, t in zip(pdf[id_col], pdf[text_col])
+                if isinstance(t, str)  # NULL text: the oracle emits no row
+            ]
+            if rows:
+                yield pd.DataFrame(rows, columns=[id_col, "simhash"])
+
+    return spread(df).select(id_col, text_col).mapInPandas(
+        batches, schema=f"{id_col} long, simhash long"
+    )
 
 
 def simhash_sql(table_expr: str, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> str:
-    """DuckDB twin of :func:`simhash` (generated, kept in lockstep)."""
+    """DuckDB oracle of :func:`simhash`: explode words -> per-bit signed
+    vote -> majority -> reassemble (generated, kept in lockstep)."""
     norm = NORMALIZED_SQL.format(col=text_col)
     votes = ", ".join(
         f"sum(CASE WHEN (({WORD_HASH_SQL.format(w='_w')} >> {j}) & 1) = 1 THEN 1 ELSE -1 END) AS _v{j}"
@@ -579,42 +599,6 @@ def minhash_lsh_pairs(
         .join(shb, "id_b")
         .select("id_a", "id_b", (inter.cast("double") / union).alias("jaccard_est"))
         .filter(F.col("jaccard_est") >= threshold)
-    )
-
-
-def simhash_fast(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
-    """Map-side SimHash via mapInPandas: the shuffle-free twin of
-    :func:`simhash`.
-
-    The explode form shuffles one row per WORD (corpus token count) into a
-    60-aggregate groupBy; this one computes each doc's fingerprint inside
-    its scan partition in a single Arrow batch pass — zero shuffle, output
-    is one row per doc. Same bit semantics (md5-derived word hashes, each
-    occurrence votes, tie -> 0), so it shares the exact DuckDB oracle; at
-    100 TB this is the variant to run, with the explode form as its
-    cross-engine reference.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    shifts = np.arange(bits, dtype=np.uint64)
-
-    def one(text: str) -> int:
-        hs = np.fromiter(
-            (_hash60_py(w) for w in _norm_words_py(text)),
-            dtype=np.uint64,
-        )
-        votes = (((hs[:, None] >> shifts) & 1).astype(np.int64) * 2 - 1).sum(axis=0)
-        return int(((votes > 0).astype(np.uint64) << shifts).sum())
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": [one(t) for t in pdf[text_col]]})
-
-    return spread(df).select(id_col, text_col).mapInPandas(
-        batches, schema=f"{id_col} long, simhash long"
     )
 
 
@@ -840,8 +824,6 @@ def contamination_report(
     text_col: str,
     eval_pred: Column,
     n: int = 8,
-    bloom_bits: int | None = None,
-    bloom_hashes: int = 5,
 ) -> DataFrame:
     """Train/eval decontamination report: for each EVAL document, the
     fraction of its distinct word-``n``-gram shingles that also occur
@@ -857,15 +839,11 @@ def contamination_report(
     sides shuffle-partition on the hash (no broadcast), which is exactly
     the Dolma/RedPajama decontamination layout.
 
-    ``bloom_bits`` enables the explicit two-phase scale path: a Bloom
-    filter built over the (small) distinct EVAL hash set is broadcast
-    against the TRAIN shingle scan (operators/bloom.py), discarding train
-    shingles that cannot hit any eval shingle BEFORE the train side's
-    distinct + semi-join shuffles — megabytes shuffled instead of
-    terabytes. Bloom false positives are re-checked by the exact semi
-    join and false negatives are impossible, so the report is IDENTICAL
-    to the plain path (tested in tests/test_llm_ops.py). Size at ~10 bits
-    per distinct eval shingle.
+    No hand-built Bloom prefilter: thinning the train scan by a filter
+    over the small eval hash set is left to Spark's runtime Bloom-filter
+    injection (``spark.sql.optimizer.runtime.bloomFilter.enabled``, on by
+    default), which the optimizer applies to shuffle joins when its size
+    conditions hold.
     """
     # Two Generate barriers (explode(array(e)) — see ngram_jaccard_pairs):
     # first materializes the word split so the n-gram lambda reads a column
@@ -900,25 +878,12 @@ def contamination_report(
     evh = ev.select("doc_id", F.explode("_sh").alias("_g")).select(
         "doc_id", _word_hash(F.col("_g")).alias("h")
     )
-    train_raw = (
+    train = (
         base.filter(~F.col("_is_eval"))
         .select(F.explode("_sh").alias("_g"))
         .select(_word_hash(F.col("_g")).alias("h"))
+        .distinct()
     )
-    if bloom_bits is not None:
-        from boxoffice_spark.operators.bloom import bloom_build, bloom_keep_maybe
-
-        # The word table feeds one broadcast join PER hash function, and
-        # each broadcast exchange would otherwise re-evaluate the whole
-        # eval-side scan (measured: 5 of the 8 parquet scans in the plan).
-        # Materialize the filter once — it IS the "build the filter" step,
-        # O(bloom_bits/64) rows from the small eval side.
-        words = bloom_build(
-            evh.select("h").distinct(), "h", bloom_bits, bloom_hashes
-        ).localCheckpoint()
-        # map-side thinning of the big side before its distinct shuffle
-        train_raw = bloom_keep_maybe(train_raw, "h", words, bloom_bits, bloom_hashes)
-    train = train_raw.distinct()
     hits = evh.join(train, "h", "left_semi").groupBy("doc_id").agg(
         F.count("*").alias("n_hit")
     )

@@ -7,14 +7,14 @@ component". Transitive closure is inherently iterative, the one shape in
 this engine Catalyst cannot express in a single plan; the idiomatic
 Spark answer is a driver-side loop of DataFrame steps (the same structure
 GraphX/GraphFrames use internally), NOT a collect()-and-compute fallback:
-each iteration is two distributed shuffles, the driver only sees a single
-convergence count.
+each iteration is a few distributed shuffles, the driver only sees a
+single convergence count.
 
-Cost model at scale: iterations = O(component diameter) — near-dup
-clusters are shallow (dozens of docs, diameter ~2-4), so 3-5 rounds in
-practice, `max_iters` bounds the worst case. Each round joins the edge
-list (shuffled once on src, reusable from cache) against the current
-labels and min-aggregates — both partial-agg friendly. `localCheckpoint`
+Cost model at scale: the large-star/small-star kernel rewrites the edge
+list itself, so rounds = O(log^2 n) regardless of component diameter —
+near-dup clusters are usually shallow, but boilerplate bridges and crawl
+loops chain them into long paths, where label propagation would need
+O(diameter) rounds. `max_iters` bounds the worst case. `localCheckpoint`
 every round truncates the lineage so plan size stays O(1) per iteration
 instead of O(iterations).
 """
@@ -24,64 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from boxoffice_spark.functions.numeric import ratio6w
-
-
-def connected_components(
-    pairs: DataFrame, src: str, dst: str, max_iters: int = 20
-) -> DataFrame:
-    """(node, cluster_id) for every node in ``pairs``, where cluster_id is
-    the smallest node id reachable through the undirected pair graph —
-    a deterministic canonical representative per component.
-
-    Min-label propagation: every node starts labeled with itself; each
-    round a node adopts the minimum label among itself and its neighbors;
-    fixpoint = components done. Converges in <= diameter rounds; raises
-    if ``max_iters`` rounds aren't enough (a pathological chain —
-    at that point use doubling/small-star variants, not a bigger budget).
-    """
-    # checkpoint the DIRECTED pair list first: the symmetric union below
-    # references it twice, and without the cut the (expensive) pair-
-    # generation subtree — a banded similarity join upstream — would be
-    # evaluated twice inside one materialization job
-    base = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
-    edges = (
-        base.union(base.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("cluster_id"))
-        .localCheckpoint()
-    )
-
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iters} iterations")
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -95,16 +37,18 @@ def _canonical(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
+def connected_components(
     pairs: DataFrame, src: str, dst: str, max_iters: int = 30
 ) -> DataFrame:
-    """(node, cluster_id) like :func:`connected_components`, via the
-    two-phase LARGE-STAR / SMALL-STAR algorithm (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the scale
-    path when components may be DEEP.
+    """(node, cluster_id) for every node in ``pairs``, where cluster_id is
+    the smallest node id reachable through the undirected pair graph —
+    a deterministic canonical representative per component. Raises if
+    ``max_iters`` rounds aren't enough.
 
-    Min-label propagation converges in O(diameter) rounds: a 10^6-node
-    chain (pathological crawl graphs, long citation threads) needs 10^6
+    Two-phase LARGE-STAR / SMALL-STAR algorithm (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14). Min-label
+    propagation converges in O(diameter) rounds: a 10^6-node chain
+    (pathological crawl graphs, long citation threads) needs 10^6
     shuffling rounds. Large-star/small-star rewrites the EDGE LIST itself
     each round — large-star hangs every node's larger neighbors onto the
     minimum of its neighborhood, small-star does the same for smaller
@@ -118,18 +62,15 @@ def connected_components_star(
     of E per star step), then an exact symmetric-difference convergence
     check. ``localCheckpoint`` truncates lineage per round.
 
-    Same contract as connected_components: deterministic, cluster_id =
-    component minimum; equality across both and the DuckDB recursive-CTE
-    oracle is tested (tests/test_graph.py), including a long-chain graph
-    where this converges in ~log rounds while min-label would need
-    O(n)."""
+    Equality with a union-find reference and the DuckDB recursive-CTE
+    oracle is tested (tests/test_graph.py, t_dedup_clusters), including a
+    200-node chain that converges well inside the default budget."""
     # checkpoint the raw pair list first: nodes and _canonical below each
     # reference it twice — without the cut the upstream pair-generation
     # join would be evaluated four times across the two materializations
     raw = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
     # canonicalization drops self-loops; remember every mentioned node so
-    # singletons still come back self-labeled (same contract as
-    # connected_components)
+    # singletons still come back self-labeled
     nodes = (
         raw.select(F.col("u").alias("node"))
         .union(raw.select(F.col("v").alias("node")))
@@ -188,9 +129,7 @@ def connected_components_star(
                     F.col("u").alias("node"), F.col("v").alias("cluster_id")
                 ).union(roots.select("node", F.col("node").alias("cluster_id")))
             )
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iters} iterations"
-    )
+    raise RuntimeError(f"connected_components did not converge in {max_iters} iterations")
 
 
 def pagerank(
@@ -292,7 +231,7 @@ def incremental_components(
     of the SUPER-GRAPH whose nodes are (old cluster labels + unseen new
     nodes) and whose edges are the new edges mapped through the standing
     labels. That graph has one node per AFFECTED label — orders of
-    magnitude smaller than the corpus — and min-label components over it
+    magnitude smaller than the corpus — and min-id components over it
     yield exactly the labels a full recompute over (old edges + new
     edges) would (min label of a merged component = min node id across
     its members, since every standing label is already its component's
@@ -339,12 +278,11 @@ def incremental_components(
         # their pairs were intra-component or self-loops) label themselves
         return standing.unionByName(fresh)
 
-    # star variant: the super-graph is usually shallow, but a batch can
-    # chain many standing clusters (A-B, B-C, ... through shared near-dups)
-    # and min-label's O(diameter) budget then runs out — observed at sf1,
-    # where the bootstrap merge IS the whole pair graph. O(log^2 n) rounds
-    # regardless of depth, same deterministic min-id labels.
-    relabel = connected_components_star(super_edges, "sa", "sb").select(
+    # the super-graph is usually shallow, but a batch can chain many
+    # standing clusters (A-B, B-C, ... through shared near-dups) — observed
+    # at sf1, where the bootstrap merge IS the whole pair graph; the star
+    # kernel's O(log^2 n) rounds hold regardless of depth.
+    relabel = connected_components(super_edges, "sa", "sb").select(
         F.col("node").alias("_old_label"), F.col("cluster_id").alias("_new_label")
     )
     # remap rows whose label merged; labels not in the super-graph pass

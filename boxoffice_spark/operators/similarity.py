@@ -122,8 +122,8 @@ def cosine_topk_arrow(
     k: int = 10,
     round_to: int = 6,
 ) -> DataFrame:
-    """Arrow/NumPy twin of :func:`cosine_topk` (the ``simhash_fast``
-    pattern): same exact semantics, different physical strategy.
+    """Arrow/NumPy twin of :func:`cosine_topk` (the ``dedup.simhash``
+    mapInPandas pattern): same exact semantics, different physical strategy.
 
     ``cosine_topk`` scores via ``zip_with``/``aggregate`` higher-order
     folds, which Spark keeps interpreted (lambda-bearing expressions are

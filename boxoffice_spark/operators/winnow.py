@@ -32,7 +32,7 @@ scan-local; cost is O(grams x w) per doc from the window min (lambda
 expressions are interpreted and not subexpression-eliminated — see
 operators/dedup.py:216). At w=10 that is ~10 comparisons per char and
 stays scan-bound; for much larger w, the mapInPandas twin pattern
-(dedup.simhash_fast) with a NumPy sliding-window argmin is the drop-in.
+(dedup.simhash) with a NumPy sliding-window argmin is the drop-in.
 Pair generation reuses the capped inverted-index layout of
 ngram_jaccard_pairs / chunk_dup_pairs: postings above ``max_postings``
 are boilerplate, not signal, and are dropped before the self-join so no
@@ -303,8 +303,8 @@ WHERE """ + _ratio6_sql("n_shared", "sza + szb - n_shared") + """ >= {threshold}
 def winnow_fast(
     df: DataFrame, id_col: str, text_col: str, k: int = DEFAULT_K, w: int = DEFAULT_W
 ) -> DataFrame:
-    """Arrow scale twin of :func:`winnow_fingerprints` (the simhash_fast
-    pattern): Karp-Rabin ROLLING k-gram hashes — the hash family the
+    """Arrow scale twin of :func:`winnow_fingerprints` (the dedup.simhash
+    mapInPandas pattern): Karp-Rabin ROLLING k-gram hashes — the hash family the
     winnowing paper itself is built on — computed vectorized in NumPy from
     one prefix-hash pass, then a strided sliding-window rightmost-min.
     O(chars) per document instead of the Catalyst form's O(grams x w)

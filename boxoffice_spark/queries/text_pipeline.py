@@ -124,11 +124,12 @@ def t_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "t_simhash",
     oracle=D.simhash_sql("documents", "doc_id", "text"),
-    tags=("dedup", "simhash"),
+    tags=("dedup", "simhash", "pandas-udf"),
 )
 def t_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tier-3 SimHash: 60-bit locality-sensitive fingerprint per doc,
-    oracle-exact across engines (md5-derived word hashes)."""
+    computed map-side (mapInPandas, zero shuffle) and oracle-exact across
+    engines (md5-derived word hashes; operators/dedup.simhash)."""
     return D.simhash(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
@@ -248,10 +249,8 @@ def t_quality_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "simhash", "pandas-udf"),
 )
 def t_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-side (mapInPandas) SimHash — zero-shuffle twin of t_simhash,
-    hash-matching the same DuckDB oracle bit for bit (operators/dedup.py
-    simhash_fast)."""
-    return D.simhash_fast(table(spark, sf_dir, "documents"), "doc_id", "text")
+    """Kept name for t_simhash: the same map-side kernel and oracle."""
+    return t_simhash(spark, sf_dir)
 
 
 @register(
@@ -337,9 +336,10 @@ FROM reach GROUP BY node
 def t_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the SimHash Hamming
     pair graph — the 'keep one per cluster' decision step after pair
-    generation. Iterative min-label propagation (driver loop of
-    distributed joins, operators/graph.py); the oracle is the same
-    transitive closure as a DuckDB recursive CTE."""
+    generation. Large-star/small-star edge rewriting (driver loop of
+    distributed joins, operators/graph.connected_components) converges in
+    O(log^2 n) rounds regardless of component diameter; the oracle is the
+    same transitive closure as a DuckDB recursive CTE."""
     from boxoffice_spark.operators.graph import connected_components
 
     pairs = D.simhash_hamming_pairs(table(spark, sf_dir, "documents"), "doc_id", "text")
@@ -354,17 +354,9 @@ def t_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "graph", "iterative"),
 )
 def t_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t_dedup_clusters via large-star/small-star (operators/graph.py
-    connected_components_star): edge-rewriting converges in O(log^2 n)
-    rounds instead of O(component diameter) — the 100 TB path when the
-    pair graph can contain deep chains (boilerplate bridges, crawl
-    loops). Same oracle, same deterministic min-id labels."""
-    from boxoffice_spark.operators.graph import connected_components_star
-
-    pairs = D.simhash_hamming_pairs(table(spark, sf_dir, "documents"), "doc_id", "text")
-    return connected_components_star(pairs, "id_a", "id_b").select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
+    """Kept name for t_dedup_clusters: the same large-star/small-star
+    kernel and oracle."""
+    return t_dedup_clusters(spark, sf_dir)
 
 
 @register(
@@ -461,26 +453,13 @@ def t_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_g=D.WORD_HASH_SQL.format(w="g"),
     ),
     bench=True,
-    tags=("dedup", "decontamination", "bloom"),
+    tags=("dedup", "decontamination"),
 )
 def t_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t_decontamination routed through the explicit Bloom prefilter
-    (operators/bloom.py): a filter built over the small eval hash set is
-    broadcast against the train shingle scan, so train shingles that
-    cannot possibly hit are dropped map-side BEFORE the distinct +
-    semi-join shuffles. SAME oracle as the plain path — the Bloom pass
-    admits only false positives, which the exact semi join re-checks, so
-    the report is bit-identical; what changes is the 100 TB shuffle
-    volume (terabytes -> megabytes when eval << train)."""
-    d = table(spark, sf_dir, "documents")
-    return D.contamination_report(
-        d,
-        "doc_id",
-        "text",
-        F.col("source") == "src0",
-        n=5,
-        bloom_bits=1 << 16,
-    )
+    """Kept name for t_decontamination, which it runs as is: the
+    train-side Bloom prefilter is left to Spark's runtime Bloom-filter
+    injection (see operators/dedup.contamination_report)."""
+    return t_decontamination(spark, sf_dir)
 
 
 _PII_AUG_SQL = (
@@ -2145,7 +2124,7 @@ def t_incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated (LSH probe of the index); here both sides derive from the
     fixture for the equality check."""
     from boxoffice_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
         incremental_components,
     )
 
@@ -2153,9 +2132,7 @@ def t_incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents"), "doc_id", "text"
     ).localCheckpoint()
     is_corpus = (F.col("id_a") % 10 != 0) & (F.col("id_b") % 10 != 0)
-    # star variant for the standing labeling: the corpus pair graph can
-    # chain deeper than min-label's O(diameter) round budget (hit at sf1)
-    standing = connected_components_star(pairs.filter(is_corpus), "id_a", "id_b")
+    standing = connected_components(pairs.filter(is_corpus), "id_a", "id_b")
     merged = incremental_components(standing, pairs.filter(~is_corpus), "id_a", "id_b")
     return merged.select(F.col("node").alias("doc_id"), "cluster_id")
 
@@ -2311,11 +2288,11 @@ def t_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-id label changes), which re-buckets those docs. One scan + the
     pair-graph components; the hash bucketing is a zero-shuffle
     projection."""
-    from boxoffice_spark.operators.graph import connected_components_star
+    from boxoffice_spark.operators.graph import connected_components
 
     docs = table(spark, sf_dir, "documents")
     pairs = D.simhash_hamming_pairs(docs, "doc_id", "text")
-    labels = connected_components_star(pairs, "id_a", "id_b")
+    labels = connected_components(pairs, "id_a", "id_b")
     keyed = (
         docs.select("doc_id")
         .join(labels, docs["doc_id"] == labels["node"], "left")
@@ -3251,12 +3228,11 @@ def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is a distinct aggregate (map-side partial dedup), and the
     probe is one hash-keyed left join whose null side IS the novelty
     count. At 100 TB both sides partition on the hash — no broadcast,
-    no pair generation; the Bloom prefilter (operators/bloom.py) drops
-    corpus shingles map-side exactly as in t_decontamination_bloom when
-    batch << corpus.
+    no pair generation; Spark's runtime Bloom-filter injection can drop
+    corpus shingles map-side when batch << corpus.
 
     Physical strategy: the map-side Arrow shingle kernel
-    (operators/dedup.word_ngram_hashes_fast — the simhash_fast pattern;
+    (operators/dedup.word_ngram_hashes_fast — the map-side simhash pattern;
     same normalization + 60-bit md5 recipe as the oracle, per-doc dedup
     in Python sets instead of a corpus-wide distinct shuffle). The
     honest — cache-released — sf1 probe billed the declarative

@@ -150,110 +150,9 @@ _PINNED = [
     "t_hybrid_rrf_search",
 ]
 
-# Round-8 window, retired: every name earned its driver row in
-# CORRECTNESS_r08 — 43 green + the 7 reds now re-pinned/decomposed above.
-_PINNED_R08_RETIRED = [
-    "dq_ks_drift", "a_mann_whitney_u", "a_permutation_test", "a_kendall_tau",
-    "a_cramers_v", "t_lang_id_agreement", "t_oov_rate", "t_span_corruption",
-    "j_asof_nearest", "w_activity_heatmap", "t_bpe_pair_stats",
-    "v_int8_quantization_report", "e_surrogate_keys", "e_display_normalize",
-    "e_array_ops", "e_backfill_overwrite", "e_case_bucketing",
-    "e_coercive_cast", "e_date_functions", "e_date_sequence_explode",
-    "e_regex_extract_brackets", "e_snake_case_rename", "e_upsert_merge",
-    "i_hierarchical_rollup", "i_latest_state_view", "i_sessionize",
-    "i_sliding_window", "i_tumbling_window", "i_watermark_resume",
-    "j_broadcast_left_join", "j_dispatch_join", "j_fuzzy_containment",
-    "j_semi_join", "j_star_join", "j_two_key_priority",
-    "p_anti_join_new_keys", "p_conjunctive_filter", "p_distinct_subset",
-    "p_membership_filter", "p_multikey_sort_limit",
-    "p_null_and_empty_filter", "p_projection_daterange",
-    "p_rolling_window_filter", "p_union_all_concat", "p_union_dedup",
-    "w_cumulative_sum", "w_datediff_derived", "w_lag_delta",
-    "w_latest_per_key", "w_rank_derive",
-]
-
-# Round-7 window, retired: every name below earned its driver row in
-# CORRECTNESS_r07 (45 green/rows-only; the 8 reds were re-pinned in r08).
-_PINNED_R07_RETIRED = [
-    # Round-7 window (VERDICT r06 items 1, 2, 4): exactly 50 names.
-    # First the 11 queries whose plan or oracle changed this round — the
-    # seven vacuous zero-row fixes (era splits moved off the fixture's
-    # minimum date; audit thresholds recalibrated; planted duplicate
-    # events; the band join widened) plus their co-edited siblings —
-    # each needs a FRESH non-vacuous green row. Then the 46-oracle + 3-rows-only queue that
-    # has never earned a driver row (all judge-verified cell-exact at
-    # sf0.01 in round 6). flagship_daily_topk_delta is NOT pinned: it
-    # holds green rows from r01 and r06 and the driver's entry() smoke
-    # check executes it every round regardless; j_asof_nearest and
-    # w_activity_heatmap (unchanged, judge-verified) defer to the r08
-    # window to make room for the three changed non-queue queries.
-    "dq_ks_drift",  # era split 1995->1998: first non-vacuous KS rows
-    "v_embedding_near_dup",  # planted copies + Arrow gram kernel rewrite
-    "m_asset_dedup",  # planted re-crawled copies; dup groups at every sf
-    "j_band_join_bucketed",  # band widened to ±10 / width-10 buckets
-    # changed by the sf1-sweep fixes (each needs a fresh green row):
-    # star-contraction components + Arrow pairs; persisted shingle frame
-    "v_semantic_keepers",
-    "t_ngram_novelty",
-    # -- the 41 oracle-backed + 3 rows-only never-driver-green queue
-    # (round-6 batches 4-24; order follows COVERAGE.md's batch ledger).
-    # 6 + 44 = 50 slots: the six entries above are changed queries whose
-    # earlier green rows went stale (each displaced one unchanged,
-    # judge-verified queue member into _DEFERRED_R08); the 44 below are
-    # the original 46+3 queue minus those five deferrals.
-    "a_mann_whitney_u",  # era split moved 1995->1998 (was vacuous 0-row)
-    "a_theil_sen_trend",
-    "w_acf_daily",
-    "t_lang_id_agreement",
-    "w_gaps_islands",
-    "p_relational_division",
-    "a_mode_per_group",
-    "t_heaps_law_fit",
-    "t_js_divergence_matrix",
-    "a_permutation_test",  # era split moved 1995->1998
-    "a_bootstrap_ci_poisson",
-    "g_degree_assortativity",
-    "t_oov_rate",
-    "a_winsorized_mean",
-    "a_kendall_tau",
-    "dq_l_diversity",  # quasi-id cells shrunk, l=5 (was vacuous 0-row)
-    "t_capture_recapture_dups",  # est>0 guard added (ADVICE r06)
-    "t_temperature_mixture",
-    "t_token_budget_select",
-    "v_centroid_similarity_matrix",
-    "a_kruskal_wallis",
-    "dq_seasonal_anomaly",
-    "s_stream_quantile_merge",  # rows-only; stream==batch tested locally
-    "g_harmonic_centrality",
-    "a_cramers_v",
-    "dq_order_lineitem_reconcile",
-    "w_bollinger_breakout",
-    "e_schema_evolution_union",  # version split moved 1995->1998
-    "a_cohens_d",  # era split moved 1995->1998 (was vacuous 0-row)
-    "dq_duplicate_payments",  # bucketed amount key (was vacuous 0-row)
-    "w_holt_backtest",  # rows-only; backtest property tests locally
-    "t_domain_loss_weights",
-    "t_span_corruption",
-    "dq_dp_noisy_release",
-    "t_code_detection",
-    "t_readability_scores",
-    "w_markov_3step",
-    "t_license_detection",
-    "a_kpi_decomposition",
-    "a_dunn_posthoc",
-    "a_price_index",  # periods moved to 1996/1999 (was vacuous 0-basket)
-    "s_stream_reconcile_totals",  # rows-only; stream==batch tested locally
-    "t_keyphrase_rake",
-    "v_matryoshka_recall",  # prefix-cumsum Arrow kernel rewrite
-]
-
-# The round-7 deferrals (j_asof_nearest, w_activity_heatmap,
-# t_bpe_pair_stats, v_int8_quantization_report, e_surrogate_keys) are all
-# pinned in the round-8 window above — the deferral queue is empty.
 # A test (tests/test_registry.py) asserts every name in _PINNED exists in
 # the registry, so the list cannot drift. The per-batch history lives in
 # COVERAGE.md (single table).
-_DEFERRED: list[str] = []
 
 
 def register(

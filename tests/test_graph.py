@@ -36,19 +36,6 @@ def test_max_iters_guard_raises(spark):
         _cc(spark, [(i, i + 1) for i in range(9)], max_iters=2)
 
 
-# ---- large-star / small-star scale variant ----------------------------------
-
-from boxoffice_spark.operators.graph import connected_components_star
-
-
-def _ccs(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "a long, b long")
-    return {
-        r.node: r.cluster_id
-        for r in connected_components_star(df, "a", "b", **kw).collect()
-    }
-
-
 def _union_find(edges):
     parent = {}
 
@@ -77,16 +64,15 @@ def _union_find(edges):
     ],
 )
 def test_star_matches_union_find_and_min_label(spark, edges):
-    want = _union_find(edges)
-    assert _ccs(spark, edges) == want
-    assert _cc(spark, edges) == want
+    assert _cc(spark, edges) == _union_find(edges)
 
 
 def test_star_deep_chain_logarithmic_rounds(spark):
-    """A 200-node path has diameter 199 — min-label needs ~199 rounds, the
-    star algorithm must finish within its default O(log^2 n) budget."""
+    """A 200-node path has diameter 199 — label propagation would need
+    ~199 rounds, the star algorithm must finish within its default
+    O(log^2 n) budget."""
     edges = [(i, i + 1) for i in range(199)]
-    got = _ccs(spark, edges)  # default max_iters=30 << diameter
+    got = _cc(spark, edges)  # default max_iters=30 << diameter
     assert got == {i: 0 for i in range(200)}
 
 

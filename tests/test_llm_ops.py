@@ -598,65 +598,6 @@ def test_heavy_hitters_exact_vs_bruteforce_adversarial_partitions(spark):
         assert ("hot", 300) in got
 
 
-def test_bloom_no_false_negatives_and_sane_fpp(spark):
-    """Every built value must pass the probe (no false negatives — the
-    property that makes the prefilter exactness-preserving); at ~13 bits
-    per element the false-positive rate on disjoint probes stays small."""
-    from boxoffice_spark.operators.bloom import bloom_build, bloom_keep_maybe
-
-    members = spark.range(0, 1000).select((F.col("id") * 7 + 1).alias("v"))
-    others = spark.range(0, 1000).select((F.col("id") * 7 + 3).alias("v"))
-    words = bloom_build(members, "v", num_bits=1 << 13, n_hashes=5)
-    kept_members = bloom_keep_maybe(members, "v", words, 1 << 13, 5).count()
-    assert kept_members == 1000  # no false negatives, ever
-    fp = bloom_keep_maybe(others, "v", words, 1 << 13, 5).count()
-    assert fp <= 100, f"false-positive rate implausibly high: {fp}/1000"
-
-
-def test_bloom_decontamination_identical_to_plain(spark, sf_dir):
-    """The Bloom-prefiltered report must be row-for-row identical to the
-    plain semi-join path (false positives re-checked, no false negatives),
-    even with an undersized filter (high fpp -> weak thinning, same answer)."""
-    from boxoffice_spark.operators.dedup import contamination_report
-
-    docs = table(spark, sf_dir, "documents")
-    pred = F.col("source") == "src0"
-    plain = contamination_report(docs, "doc_id", "text", pred, n=5)
-    for bits in (1 << 16, 1 << 8):
-        bloom = contamination_report(
-            docs, "doc_id", "text", pred, n=5, bloom_bits=bits
-        )
-        assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, bloom.collect())
-        ), f"bloom path diverged at num_bits={bits}"
-
-
-def test_bloom_probe_is_broadcast_only(spark):
-    """The probe side must be thinned by BROADCAST hash joins only — no
-    shuffle exchange of the probed DataFrame before the bit tests."""
-    from boxoffice_spark.operators.bloom import bloom_build, bloom_keep_maybe
-
-    big = spark.range(0, 10_000).select(F.col("id").alias("v"))
-    small = spark.range(0, 100).select((F.col("id") * 3).alias("v"))
-    words = bloom_build(small, "v", num_bits=1 << 10, n_hashes=3)
-    plan = (
-        bloom_keep_maybe(big, "v", words, 1 << 10, 3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    # the only exchanges allowed are the broadcast ones + the word-table agg
-    for line in plan.splitlines():
-        if "Exchange" in line and "Broadcast" not in line:
-            # only the word-table build may shuffle (groupBy word_idx —
-            # Catalyst names the derived key _groupingexpression)
-            assert (
-                "hashpartitioning(word_idx" in line
-                or "hashpartitioning(_groupingexpression" in line
-            ), line
-
-
 def test_line_dedup_keep_first_semantics(spark):
     """Repeated 8-word units keep exactly their first (doc_id, pos)
     occurrence corpus-wide; unique content is untouched; fully-deduped

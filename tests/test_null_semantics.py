@@ -96,3 +96,43 @@ def test_snapshot_diff_empty_compare_cols(spark):
     new = spark.createDataFrame([(2,), (3,)], "k long")
     got = {r.k: r.change_type for r in snapshot_diff(old, new, ["k"], []).collect()}
     assert got == {1: "delete", 3: "insert"}
+
+
+@pytest.fixture(scope="module")
+def edge_doc_dir(tmp_path_factory):
+    """documents.parquet of SimHash edge rows: empty, one word, whitespace
+    runs, non-ASCII, a non-breaking space (a word character in all three
+    normalizers) and a NULL text."""
+    rows = pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3, 4, 5, 6, 7],
+            "text": [
+                "",
+                "word",
+                "  Alpha\t\tbeta \n\n GAMMA  ",
+                "Äpfel ÜBER Straße naïve café 東京 東京",
+                "non\u00a0breaking space",
+                None,
+                "   ",
+            ],
+        }
+    )
+    d = tmp_path_factory.mktemp("simhash_edges")
+    rows.to_parquet(d / "documents.parquet", index=False)
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ["t_simhash", "t_simhash_fast"])
+def test_simhash_edge_rows_match_oracle(spark, edge_doc_dir, name):
+    """Both SimHash names equal DuckDB's simhash_sql on edge rows; a NULL
+    text drops the doc instead of failing the Python worker."""
+    spec = SPECS[name]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS "
+        f"SELECT * FROM read_parquet('{edge_doc_dir}/documents.parquet')"
+    )
+    df = spec.fn(spark, edge_doc_dir)
+    result = compare(name, df, con, spec.oracle)
+    assert result.ok, str(result)
+    assert sorted(r.doc_id for r in df.collect()) == [1, 2, 3, 4, 5, 7]

@@ -80,3 +80,29 @@ def test_agent_sql_guardrail(spark, sf_dir):
             spark, sf_dir,
             "SELECT * FROM region r JOIN nation n ON n.n_regionkey > r.r_regionkey",
         )
+
+
+def test_agent_sql_guard_refuses_commands_before_running(spark, sf_dir):
+    """Spark runs commands eagerly inside spark.sql, so the guard must
+    refuse a non-query BEFORE execution: the view survives, nothing gets
+    cached, and the refusal launches no Spark job."""
+    import pytest
+
+    from boxoffice_spark.agent import UnsafePlanError, validate_sql
+    from boxoffice_spark.tables import register_views
+
+    register_views(spark, sf_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("agent_guard_refusals", "validate_sql refusals")
+    try:
+        for sql in ("DROP VIEW lineitem", "CACHE TABLE lineitem"):
+            with pytest.raises(UnsafePlanError):
+                validate_sql(spark, sf_dir, sql)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert spark.catalog.tableExists("lineitem")
+    assert not spark.catalog.isCached("lineitem")
+    assert list(sc.statusTracker().getJobIdsForGroup("agent_guard_refusals")) == []
+    # a trailing semicolon still passes as a query
+    assert validate_sql(spark, sf_dir, "SELECT count(*) AS n FROM region;").first().n == 5
