@@ -39,13 +39,16 @@ is value + build_total.
 Contention self-defense (r12): this box shows minute-scale hypervisor CPU
 steal storms (r10 and r11 driver artifacts both ran inside one — the r11
 artifact carries steal_delta 35,857 jiffies vs the <500 trust threshold).
-If the first warm pass accrues > 500 steal jiffies, or load average was
+If the first warm pass accrues >= 500 steal jiffies, or load average was
 > 2 before the run started, the ENTIRE warm pass re-runs once (cache
-cleared first) and the pass with the lower steal_delta is kept; both
-passes' contention markers and totals are recorded under
-``contention.passes`` so nothing is hidden. Per-pass methodology is
-byte-identical to previous rounds; on a quiet box exactly one pass runs
-and the artifact is shape-compatible with r11's (additions only).
+cleared first) and the pass with the lower steal_delta is kept (the
+earlier pass on a tie); both passes' contention markers and totals are
+recorded under ``contention.passes`` so nothing is hidden.
+``contention.trusted`` (also on the compact tail line) says whether the
+kept pass itself was uncontended by the same two tests. Per-pass
+methodology is byte-identical to previous rounds; on a quiet box exactly
+one pass runs and the artifact is shape-compatible with r11's (additions
+only).
 
 Cache semantics, stated plainly: queries that persist a shared intermediate
 (the LSH candidate set, the BM25/TF-IDF tf table, the unigram vocab) report
@@ -63,6 +66,11 @@ import json
 import os
 import sys
 import time
+
+# A warm pass is contended (re-run once, and not trusted if kept) when it
+# accrued this many steal jiffies or started above this 1-minute loadavg.
+STEAL_TRUST = 500
+LOAD_SANE = 2.0
 
 
 def main() -> None:
@@ -157,17 +165,22 @@ def main() -> None:
                        "steal_delta": _steal_delta(before, after),
                        "value": round(sum(results[-1][0].values()), 3)})
 
+    def _contended(p: dict) -> bool:
+        sd = p["steal_delta"]
+        return (sd is not None and sd >= STEAL_TRUST) or p["before"].get("loadavg_1m", 0.0) > LOAD_SANE
+
     _timed_pass()
-    sd0 = passes[0]["steal_delta"]
-    if (sd0 is not None and sd0 > 500) or passes[0]["before"].get("loadavg_1m", 0.0) > 2.0:
+    if _contended(passes[0]):
         spark.catalog.clearCache()
         _timed_pass()
     inf = float("inf")
+    # lower steal wins; a tie keeps the earlier pass (never the faster one,
+    # which would bias the headline toward the lower number)
     kept = min(
         range(len(passes)),
         key=lambda i: (
             passes[i]["steal_delta"] if passes[i]["steal_delta"] is not None else inf,
-            passes[i]["value"],
+            i,
         ),
     )
     timings, builds, colds = results[kept]
@@ -239,6 +252,9 @@ def main() -> None:
         # contended and the full warm loop re-ran; `kept` indexes into it)
         "passes": passes,
         "kept_pass": kept,
+        # the kept pass ran with steal < STEAL_TRUST jiffies and started at
+        # loadavg <= LOAD_SANE (a missing marker is not trusted)
+        "trusted": passes[kept]["steal_delta"] is not None and not _contended(passes[kept]),
     }
 
     full = {
@@ -278,6 +294,7 @@ def main() -> None:
         "load_after": load_after.get("loadavg_1m"),
         "steal_delta": contention["steal_delta"],
         "n_passes": len(passes),
+        "trusted": contention["trusted"],
     }
     compact["full_artifact"] = "BENCH_FULL.json"
     line = json.dumps(compact, separators=(",", ":"))

@@ -8,8 +8,9 @@ owes the agent is:
 
 1. a schema-grounding string over the live catalog (S13), and
 2. a SQL execution surface where generated text hits the same Catalyst
-   plans as the DataFrame API (S6) — views registered once, ``spark.sql``
-   from then on,
+   plans as the DataFrame API (S6) — views re-registered per call from the
+   session's schema cache (tables.py: no inference job while the files are
+   unchanged), ``spark.sql`` from then on,
 3. dialect guidance: the reference's prompt pins SQLite-isms
    (ai_agent.py:91-99: LIKE-probing of JSON-encoded arrays, ``'[]'``
    exclusion, space-insensitive title match via REPLACE); on this engine
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
-from boxoffice_spark.tables import describe_tables, register_views
+from boxoffice_spark.tables import TABLE_NAMES, register_views, table_schema
 
 # Reference ai_agent.py:91-99 retargeted from SQLite to Spark SQL: the same
 # three dialect hazards, with native-array idioms replacing JSON-string
@@ -40,17 +41,16 @@ SPARK_DIALECT_RULES = """\
 
 def schema_grounding(spark: SparkSession, sf_dir: str) -> str:
     """Schema string for prompt grounding — one block per table, one
-    ``name type [nullable]`` line per column, from the live catalog
-    (``DataFrame.schema``), mirroring ai_agent._get_db_schema's
-    sqlite_master walk."""
+    ``name type [nullable]`` line per column (the rows of
+    ``describe_tables``), mirroring ai_agent._get_db_schema's
+    sqlite_master walk. Read from the session's schema cache: no Spark job
+    while the table files are unchanged."""
     lines: list[str] = []
-    current = None
-    for row in describe_tables(spark, sf_dir).collect():
-        if row.table_name != current:
-            current = row.table_name
-            lines.append(f"\nTable {current}:")
-        null = "" if row.is_nullable else " NOT NULL"
-        lines.append(f"  {row.column_name} {row.data_type}{null}")
+    for name in TABLE_NAMES:
+        lines.append(f"\nTable {name}:")
+        for f in table_schema(spark, sf_dir, name).fields:
+            null = "" if f.nullable else " NOT NULL"
+            lines.append(f"  {f.name} {f.dataType.simpleString()}{null}")
     return "\n".join(lines).strip()
 
 
@@ -68,7 +68,10 @@ def agent_prompt(spark: SparkSession, sf_dir: str, question: str) -> str:
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     """S6/D4 execution surface: register the fixture tables as temp views
     and run arbitrary SQL text through Catalyst. Same logical plans as the
-    DataFrame API — the entire §2 inventory is reachable from here."""
+    DataFrame API — the entire §2 inventory is reachable from here. The
+    views are re-registered on every call, from cached schemas (no
+    inference job while the files are unchanged), so a republished table
+    is picked up by the next call."""
     register_views(spark, sf_dir)
     return spark.sql(sql)
 

@@ -8,7 +8,7 @@ this engine Catalyst cannot express in a single plan; the idiomatic
 Spark answer is a driver-side loop of DataFrame steps (the same structure
 GraphX/GraphFrames use internally), NOT a collect()-and-compute fallback:
 each iteration is a few distributed shuffles, the driver only sees a
-single convergence count.
+single convergence bit per round.
 
 Cost model at scale: the large-star/small-star kernel rewrites the edge
 list itself, so rounds = O(log^2 n) regardless of component diameter —
@@ -60,7 +60,7 @@ def connected_components(
     Each round: two self-aggregating joins (groupBy u + join back on u —
     the second join reuses the groupBy's hash partitioning, so one shuffle
     of E per star step), then an exact symmetric-difference convergence
-    check. ``localCheckpoint`` truncates lineage per round.
+    check in one job. ``localCheckpoint`` truncates lineage per round.
 
     Equality with a union-find reference and the DuckDB recursive-CTE
     oracle is tested (tests/test_graph.py, t_dedup_clusters), including a
@@ -115,12 +115,11 @@ def connected_components(
             .union(smins.select("u", F.col("m").alias("v")))
         ).localCheckpoint()
         # exact convergence: edge sets identical (symmetric difference
-        # empty) — a count/hash shortcut could false-converge
-        changed = (
-            small.exceptAll(e).count() + e.exceptAll(small).count()
-        )
+        # empty, tested in one job) — a count/hash shortcut could
+        # false-converge
+        converged = small.exceptAll(e).union(e.exceptAll(small)).isEmpty()
         e = small
-        if changed == 0:
+        if converged:
             roots = e.select(F.col("v").alias("node")).distinct().join(
                 e.select(F.col("u").alias("node")), "node", "left_anti"
             )
