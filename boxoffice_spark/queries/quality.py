@@ -107,16 +107,18 @@ def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def psi_drift_terms(d: DataFrame) -> DataFrame:
     """PSI terms per language for a documents frame, batch split =
-    doc_id % 10 == 0. Shared by dq_distribution_drift and the streaming
-    twin's equality tests (tests/test_streaming.py runs it over arbitrary
-    file layouts to check the multi-micro-batch merge).
+    doc_id % 10 == 0: :func:`psi_counts` then :func:`psi_terms`. Shared
+    by dq_distribution_drift and the streaming twin's equality tests
+    (tests/test_streaming.py runs it over arbitrary file layouts to check
+    the multi-micro-batch merge)."""
+    return psi_terms(psi_counts(d))
 
-    Zero-count buckets: a language with NO batch (or no corpus) members
-    makes the classic term undefined (log 0) — both sides emit an explicit
-    NULL psi_term for it. NULL here means ONE-SIDED BUCKET = maximal
-    drift: alert on it directly, never sum it away. (The guard also keeps
-    the DuckDB oracle from hard-erroring on ln(0).)"""
-    counted = d.groupBy("lang").agg(
+
+def psi_counts(d: DataFrame) -> DataFrame:
+    """The counting half of :func:`psi_drift_terms`: (lang, n_corpus,
+    n_batch). A plain aggregate, so it also runs as the streaming twin's
+    update-mode aggregation (streaming/jobs.stream_drift_monitor)."""
+    return d.groupBy("lang").agg(
         F.sum(F.when(F.col("doc_id") % 10 != 0, 1).otherwise(0))
         .cast("long")
         .alias("n_corpus"),
@@ -124,6 +126,17 @@ def psi_drift_terms(d: DataFrame) -> DataFrame:
         .cast("long")
         .alias("n_batch"),
     )
+
+
+def psi_terms(counted: DataFrame) -> DataFrame:
+    """Counts -> PSI terms over a (lang, n_corpus, n_batch) table with one
+    row per language; denominators are the table's global sums.
+
+    Zero-count buckets: a language with NO batch (or no corpus) members
+    makes the classic term undefined (log 0) — both sides emit an explicit
+    NULL psi_term for it. NULL here means ONE-SIDED BUCKET = maximal
+    drift: alert on it directly, never sum it away. (The guard also keeps
+    the DuckDB oracle from hard-erroring on ln(0).)"""
     from pyspark.sql import Window
 
     w = Window.partitionBy()

@@ -77,10 +77,12 @@ def s_stream_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("s_stream_drift_monitor", oracle=None, tags=("streaming", "drift"))
 def s_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-micro-batch PSI drift monitor via foreachBatch (streaming agg
-    -> static-side join, the post-aggregation join streaming proper can't
-    express). Batch twin: dq_distribution_drift; final-table equality
-    asserted in tests/test_streaming.py."""
+    """Streaming PSI drift monitor: the batch twin's per-language counts
+    (quality.psi_counts) run as an update-mode aggregate, folded across
+    micro-batches, and its counts -> terms half (quality.psi_terms) reads
+    the PSI terms off the drained counts. Batch twin:
+    dq_distribution_drift; final-table equality asserted in
+    tests/test_streaming.py."""
     from boxoffice_spark.streaming.jobs import stream_drift_monitor
 
     return stream_drift_monitor(spark, sf_dir)
@@ -88,10 +90,10 @@ def s_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("s_stream_embedding_drift", oracle=None, tags=("streaming", "drift", "vector"))
 def s_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-micro-batch embedding-centroid drift via foreachBatch: the
-    stream's per-(label, dim) decimal sums merge into a standing view and
-    every label's centroid shift is recomputed per batch (multi-batch-safe
-    denominators, O(labels x dims) state). Batch twin: v_embedding_drift;
+    """Streaming embedding-centroid drift: the stream's per-(label, dim)
+    decimal sums are folded across micro-batches into a standing table
+    (O(labels x dims) state) and every label's centroid shift is read
+    once from the drained sums. Batch twin: v_embedding_drift;
     final-table equality asserted in tests/test_streaming.py."""
     from boxoffice_spark.streaming.jobs import stream_embedding_drift
 

@@ -12,66 +12,66 @@ execution. Locally they're driven to completion synchronously with
 ``availableNow`` over the fixture parquet (bounded source); on a cluster
 the trigger becomes ``processingTime='10 minutes'`` against a live source
 and nothing else changes.
+
+Sources. Every stream reads through ``_table_stream``: all
+``{name}*.parquet`` files of a table in ``sf_dir``. ``events`` takes the
+parquet schema ``tables.table()`` inferred (the session's schema cache)
+and the same ``ts`` ingestion rule, so a stream and its batch twin see one
+type on any fixture generation; the other tables declare their schema.
+
+The fold contract. Jobs that keep standing state between micro-batches
+run through one driver, ``_fold(stream, step, mode)``:
+
+- per micro-batch, ``state = step(prev, batch)``; ``prev`` is None on the
+  first batch, else what the previous step returned: one DataFrame, or a
+  tuple of them for jobs with two standing tables;
+- each state frame is localCheckpointed into a uuid-named ``global_temp``
+  view (foreachBatch runs in a cloned session, where plain temp views die)
+  and read back from there by the next batch;
+- after the availableNow drain ``_fold`` returns the last state, resolved
+  in the caller's session, or None when no micro-batch ran; its views are
+  dropped on every exit, a failed micro-batch included.
+
+Each job then runs its readout once over the drained state.
 """
 
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from boxoffice_spark.functions.numeric import dsum
+from boxoffice_spark import tables
+from boxoffice_spark.functions.numeric import dsum, ratio6
+from boxoffice_spark.operators.upsert import merge_upsert
 
-_EVENTS_SCHEMA_NANOS = (
-    "event_id long, ts long, user_id long, event_type string, value double, props string"
-)
-_EVENTS_SCHEMA_MICROS = (
-    "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-    "value double, props string"
-)
+# declared stream schemas (events comes from tables' cache). Lineitem
+# names only the columns its job touches: the reader prunes to the
+# declared schema.
+_STREAM_SCHEMAS = {
+    "documents": "doc_id long, text string, lang string, source string, n_chars long",
+    "embeddings": "vec_id long, embedding array<float>, label int",
+    "lineitem": "l_orderkey long, l_extendedprice double, l_discount double, l_tax double",
+}
 
-# sf_dir -> whether events.ts is physically int64 nanos (fixture drift:
-# the driver regenerates testdata per round and has changed this before).
-_PROBE_CACHE: dict[str, bool] = {}
+_State = DataFrame | tuple[DataFrame, ...]
 
 
-def _events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files: int | None = None,
+def _table_stream(
+    spark: SparkSession, sf_dir: str, name: str, max_files: int | None = None
 ) -> DataFrame:
-    """Streaming scan of the events table, applying the same ``ts``
-    ingestion rule as tables.table (session-UTC TIMESTAMP whatever the
-    fixture's physical type). The file-stream source needs a user-supplied
-    schema, so one cheap batch schema probe (footer read, no data scan,
-    cached per sf_dir) picks the matching stream schema + conversion. The
-    session-wide ``nanosAsLong`` conf is flipped only when the probe
-    actually finds an int64 ts — a micros-typed fixture leaves shared
-    session state untouched."""
-    nanos = _PROBE_CACHE.get(sf_dir)
-    if nanos is None:
-        try:
-            probe = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
-            nanos = isinstance(probe, T.LongType)
-        except Exception:
-            # nanos-typed footer without the legacy conf raises; retry with it
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            probe = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
-            nanos = isinstance(probe, T.LongType)
-        _PROBE_CACHE[sf_dir] = nanos
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # the file-stream source wants a directory; glob-filter down to events
-    reader = spark.readStream.schema(
-        _EVENTS_SCHEMA_NANOS if nanos else _EVENTS_SCHEMA_MICROS
-    ).option("pathGlobFilter", glob)
+    """File stream over every ``{name}*.parquet`` in ``sf_dir`` (the
+    file-stream source wants a directory; the glob picks the table's
+    files). ``max_files`` caps files per micro-batch."""
+    if name == "events":
+        schema = tables.table_read_schema(spark, sf_dir, name)
+    else:
+        schema = _STREAM_SCHEMAS[name]
+    reader = spark.readStream.schema(schema).option("pathGlobFilter", f"{name}*.parquet")
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files))
-    raw = reader.parquet(sf_dir)
-    if nanos:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return tables._ingest(name, reader.parquet(sf_dir))
 
 
 def _run_to_completion(result: DataFrame, mode: str) -> DataFrame:
@@ -90,6 +90,54 @@ def _run_to_completion(result: DataFrame, mode: str) -> DataFrame:
     return result.sparkSession.table(name)
 
 
+def _fold(
+    stream: DataFrame,
+    step: Callable[[_State | None, DataFrame], _State],
+    mode: str = "append",
+) -> _State | None:
+    """Drain ``stream`` folding each micro-batch into standing state (the
+    module docstring's fold contract)."""
+    spark = stream.sparkSession
+    base = "s_fold_" + uuid.uuid4().hex[:12]
+    views: list[str] = []  # one global temp view per state frame
+    single = True  # the step returns one DataFrame, not a tuple
+
+    def load(s: SparkSession) -> _State | None:
+        if not views:
+            return None
+        parts = tuple(s.table(f"global_temp.{v}") for v in views)
+        return parts[0] if single else parts
+
+    def fold_batch(batch: DataFrame, _batch_id: int) -> None:
+        nonlocal single
+        state = step(load(batch.sparkSession), batch)
+        single = isinstance(state, DataFrame)
+        for i, part in enumerate((state,) if single else state):
+            if i == len(views):
+                views.append(f"{base}_{i}")
+            part.localCheckpoint().createOrReplaceGlobalTempView(views[i])
+
+    try:
+        q = (
+            stream.writeStream.outputMode(mode)
+            .foreachBatch(fold_batch)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return load(spark)
+    finally:
+        for v in views:
+            spark.catalog.dropGlobalTempView(v)
+
+
+def _replace_by(*keys: str) -> Callable[[DataFrame | None, DataFrame], DataFrame]:
+    """Fold step for an update-mode aggregate: each update row carries its
+    key's full new total, so it replaces the standing row for that key
+    (merge_upsert — null-safe on the key, so a NULL key stays one row)."""
+    return lambda prev, upd: upd if prev is None else merge_upsert(prev, upd, list(keys))
+
+
 def tumbling_window_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -102,7 +150,7 @@ def tumbling_window_stream(
     (append mode would hold back windows newer than the final watermark —
     correct for an unbounded stream, surprising for a file replay).
     """
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
@@ -120,7 +168,7 @@ def streaming_dedup_first_per_key(
     latest-state view (queries/incremental.py i_latest_state_view) is the
     read-side complement, exactly like the reference's append-log +
     window-on-read split."""
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["user_id", "event_type"])
     return _run_to_completion(deduped.select("user_id", "event_type", "ts", "value"), "append")
 
@@ -148,7 +196,7 @@ def sessionize_stream(
     exact-gap collisions measure-zero, and the equality test does not
     depend on it.
     """
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))
@@ -178,7 +226,7 @@ def stream_stream_attribution_join(
     cluster the same plan runs against two live sources; here the bounded
     fixture replay drains with availableNow.
     """
-    ev = _events_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")
         .select(
@@ -222,9 +270,9 @@ def stream_static_enrich(
     stream-stream joins), so the join adds zero streaming state and the
     dim can be swapped between restarts. Filtered to one event type so
     the append-mode output stays bounded."""
-    ev = _events_stream(spark, sf_dir).filter(F.col("event_type") == event_type)
+    ev = _table_stream(spark, sf_dir, "events").filter(F.col("event_type") == event_type)
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        tables.table(spark, sf_dir, "customer")
         .select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("segment"),
@@ -256,17 +304,12 @@ def stream_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from boxoffice_spark.operators.dedup import normalized_text
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     incoming = raw.filter(F.col("doc_id") % 10 == 0).select(
         "doc_id", F.md5(normalized_text("text")).alias("fingerprint")
     )
     corpus = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        tables.table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 != 0)
         .select(F.md5(normalized_text("text")).alias("fingerprint"))
         .distinct()
@@ -278,131 +321,39 @@ def stream_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest-drift monitor: the incoming document stream's
-    per-language mix is compared against the STATIC standing-corpus mix,
-    emitting PSI terms per micro-batch via ``foreachBatch`` — the
-    monitoring twin of the batch gate dq_distribution_drift
-    (queries/quality.py), and the foreachBatch pattern for metrics whose
-    formula needs a static-side join AFTER a streaming aggregation
-    (stream-static joins are not allowed downstream of a streaming agg,
-    but inside foreachBatch each update is a plain batch DataFrame).
+    """Streaming ingest-drift monitor: the streaming twin of the batch gate
+    dq_distribution_drift (queries/quality.py). The document stream runs
+    the batch query's own counting half (quality.psi_counts: per-language
+    corpus and batch counts, split by doc_id % 10) as an update-mode
+    aggregate; each micro-batch replaces the changed languages' rows in
+    the standing count table (update rows carry full totals), and after
+    the drain the batch query's counts -> terms half (quality.psi_terms)
+    reads the PSI terms off it once — global denominators, a NULL
+    language kept as one row, exactly as in batch. maxFilesPerTrigger=1
+    forces one micro-batch per input file; the drained table equals
+    psi_drift_terms over the same files (tests/test_streaming.py:
+    single-file, split-file and NULL-key layouts)."""
+    from boxoffice_spark.queries.quality import psi_counts, psi_terms
 
-    The stream aggregates per-language counts in update mode; each batch
-    MERGES the changed languages' counts into a standing count view first
-    (update-mode batches carry only changed languages, each with its full
-    updated total), then recomputes EVERY language's PSI term from the
-    merged count table — so denominators are always global, never the
-    current update's partial sum, and the table is correct after any
-    number of micro-batches (maxFilesPerTrigger=1 forces one batch per
-    input file). After the availableNow drain the final table equals the
-    batch query's output exactly — asserted in tests/test_streaming.py
-    for both the single-file and the split-file (multi-batch) layouts.
-    """
-    from pyspark.sql import Window
-
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-    batch_counts = (
-        raw.filter(F.col("doc_id") % 10 == 0).groupBy("lang").agg(
-            F.count("*").cast("long").alias("n_batch")
-        )
-    )
-    # localCheckpoint once: the static side is identical for every
-    # micro-batch — without it the closure would re-run the corpus
-    # aggregation per batch (lazy plan captured in foreachBatch).
-    corpus = (
-        spark.read.option("pathGlobFilter", "documents*.parquet")
-        .parquet(sf_dir)
-        .filter(F.col("doc_id") % 10 != 0)
-        .groupBy("lang")
-        .agg(F.count("*").cast("long").alias("n_corpus"))
-        .localCheckpoint()
-    )
-    name = "s_drift_" + uuid.uuid4().hex[:12]
-    counts_name = name + "_counts"
-
-    def emit_psi(update: DataFrame, batch_id: int) -> None:
-        # 1) merge this update's per-language counts into the standing count
-        # view (replace changed languages, keep the rest). foreachBatch runs
-        # in a CLONED session, so the handoff must be a GLOBAL temp view
-        # (plain temp views die with the micro-batch session). Existence is
-        # checked explicitly — a bare try/except here would silently reset
-        # the standing counts on any OTHER failure (lost checkpoint blocks,
-        # concurrent replace), recreating the partial-denominator bug class.
-        s = update.sparkSession
-        if s.catalog.tableExists(f"global_temp.{counts_name}"):
-            prev = s.table(f"global_temp.{counts_name}")
-            merged = prev.join(update.select("lang"), "lang", "left_anti").unionByName(
-                update
-            )
-        else:
-            merged = update
-        merged = merged.localCheckpoint()
-        merged.createOrReplaceGlobalTempView(counts_name)
-        # 2) recompute ALL psi terms from the merged counts — global
-        # denominators every batch, so intermediate tables are internally
-        # consistent and the final one matches the batch query exactly.
-        w = Window.partitionBy()
-        joined = merged.join(corpus, "lang", "full_outer").select(
-            "lang",
-            F.coalesce("n_corpus", F.lit(0)).alias("n_corpus"),
-            F.coalesce("n_batch", F.lit(0)).alias("n_batch"),
-        )
-        p = F.col("n_corpus").cast("double") / F.sum("n_corpus").over(w)
-        q = F.col("n_batch").cast("double") / F.sum("n_batch").over(w)
-        # zero-count guard mirrors quality.psi_drift_terms: NULL psi_term
-        # = one-sided language = alert, never log(0)
-        term = F.when(
-            (F.col("n_corpus") > 0) & (F.col("n_batch") > 0),
-            F.round((q - p) * F.log(q / p), 6),
-        )
-        out = joined.select("lang", "n_corpus", "n_batch", term.alias("psi_term"))
-        out.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        batch_counts.writeStream.outputMode("update")
-        .foreachBatch(emit_psi)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # hand back the (tiny, already-checkpointed) final table and DROP the
-    # handoff views — repeated monitor calls must not accumulate
-    # uuid-named global temp views in a long-lived session
-    out = spark.table(f"global_temp.{name}").localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    spark.catalog.dropGlobalTempView(counts_name)
-    return out
+    docs = _table_stream(spark, sf_dir, "documents", max_files=1)
+    counts = _fold(psi_counts(docs), _replace_by("lang"), "update")
+    return psi_terms(counts).localCheckpoint()
 
 
 def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of v_embedding_drift: the incoming embedding stream's
     per-label centroid is tracked incrementally and compared against the
-    STATIC standing-corpus centroid per micro-batch. Same multi-batch-safe
-    foreachBatch pattern as stream_drift_monitor: the update-mode stream
-    aggregates per-(label, dim) decimal sums + counts (each update row
-    carries the full new total for its key), each batch MERGES changed
-    keys into a standing sum view, then recomputes EVERY label's shift
-    from the merged sums — so intermediate tables always use complete
-    totals, and after the drain the final table equals the batch query
-    exactly (asserted in tests/test_streaming.py, single- and split-file
-    layouts). State is O(labels x dims) — independent of stream length."""
-    from boxoffice_spark.functions.numeric import dsum
-
-    schema = "vec_id long, embedding array<float>, label int"
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
+    STATIC standing-corpus centroid. The update-mode stream aggregates
+    per-(label, dim) decimal sums + counts (each update row carries the
+    full new total for its key) and each micro-batch replaces the changed
+    keys in the standing sum table; after the drain the shift of EVERY
+    label is read once from the complete sums, so the final table equals
+    the batch query exactly (asserted in tests/test_streaming.py, single-
+    and split-file layouts). State is O(labels x dims) — independent of
+    stream length."""
     batch_sums = (
-        raw.filter(F.col("vec_id") % 10 == 0)
+        _table_stream(spark, sf_dir, "embeddings", max_files=1)
+        .filter(F.col("vec_id") % 10 == 0)
         .select(
             "label",
             F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "val"),
@@ -410,13 +361,11 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label", "dim")
         .agg(dsum("val", 9).alias("s_batch"), F.count("*").alias("n_batch"))
     )
-    static = spark.read.option("pathGlobFilter", "embeddings*.parquet").parquet(sf_dir)
-    # localCheckpoint once: the static-side posexplode + aggregate over the
-    # WHOLE corpus would otherwise re-execute inside every micro-batch (the
-    # lazy plan is captured by the foreachBatch closure) — the expensive
-    # side here, unlike the PSI monitor's tiny per-lang counts.
+    sums = _fold(batch_sums, _replace_by("label", "dim"), "update")
     corpus_dims = (
-        static.filter(F.col("vec_id") % 10 != 0)
+        spark.read.option("pathGlobFilter", "embeddings*.parquet")
+        .parquet(sf_dir)
+        .filter(F.col("vec_id") % 10 != 0)
         .select(
             "label",
             F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "val"),
@@ -426,72 +375,43 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dsum("val", 9) / F.count("val")).alias("cm"),
             F.count("*").alias("n_corpus"),
         )
+    )
+    # FULL OUTER on (label, dim): a label with no batch vectors (or no
+    # corpus vectors) must still emit its row — with count 0 and a NULL
+    # shift — exactly as the batch twin's conditional aggregates do; an
+    # inner join would silently drop one-sided labels.
+    per_dim = sums.join(corpus_dims, ["label", "dim"], "full_outer").select(
+        "label",
+        "dim",
+        "cm",
+        (F.col("s_batch") / F.col("n_batch")).alias("bm"),
+        "n_corpus",
+        "n_batch",
+    )
+    shift = (F.col("cm") - F.col("bm")) * (F.col("cm") - F.col("bm"))
+    return (
+        per_dim.groupBy("label")
+        .agg(
+            # per-dim counts are all equal; coalesce covers one-sided labels
+            F.coalesce(F.max("n_corpus"), F.lit(0)).alias("n_corpus"),
+            F.coalesce(F.max("n_batch"), F.lit(0)).cast("long").alias("n_batch"),
+            F.round(dsum(shift, 12), 9).alias("centroid_shift_sq"),
+        )
+        .select("label", "n_corpus", "n_batch", "centroid_shift_sq")
         .localCheckpoint()
     )
-    name = "s_edrift_" + uuid.uuid4().hex[:12]
-    sums_name = name + "_sums"
-
-    def emit_shift(update: DataFrame, batch_id: int) -> None:
-        # explicit existence check (not try/except): any OTHER read failure
-        # must propagate, not silently reset the standing sums
-        s = update.sparkSession
-        if s.catalog.tableExists(f"global_temp.{sums_name}"):
-            prev = s.table(f"global_temp.{sums_name}")
-            merged = prev.join(
-                update.select("label", "dim"), ["label", "dim"], "left_anti"
-            ).unionByName(update)
-        else:
-            merged = update
-        merged = merged.localCheckpoint()
-        merged.createOrReplaceGlobalTempView(sums_name)
-        # FULL OUTER on (label, dim): a label with no batch vectors (or no
-        # corpus vectors) must still emit its row — with count 0 and a NULL
-        # shift — exactly as the batch twin's conditional aggregates do; an
-        # inner join would silently drop one-sided labels.
-        per_dim = merged.join(corpus_dims, ["label", "dim"], "full_outer").select(
-            "label",
-            "dim",
-            "cm",
-            (F.col("s_batch") / F.col("n_batch")).alias("bm"),
-            "n_corpus",
-            "n_batch",
-        )
-        shift = (F.col("cm") - F.col("bm")) * (F.col("cm") - F.col("bm"))
-        out = (
-            per_dim.groupBy("label")
-            .agg(
-                # per-dim counts are all equal; coalesce covers one-sided labels
-                F.coalesce(F.max("n_corpus"), F.lit(0)).alias("n_corpus"),
-                F.coalesce(F.max("n_batch"), F.lit(0)).cast("long").alias("n_batch"),
-                F.round(dsum(shift, 12), 9).alias("centroid_shift_sq"),
-            )
-            .select("label", "n_corpus", "n_batch", "centroid_shift_sq")
-        )
-        out.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        batch_sums.writeStream.outputMode("update")
-        .foreachBatch(emit_shift)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(f"global_temp.{name}").localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    spark.catalog.dropGlobalTempView(sums_name)
-    return out
 
 
 def stream_completeness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of dq_completeness_by_day: the incoming event
     stream's per-day quality counters, maintained across micro-batches
-    with the same merge-by-key foreachBatch pattern as
-    stream_drift_monitor. The update-mode aggregation emits the FULL new
-    totals for each changed day, so the merge is replace-changed-days —
-    the standing table is correct after any number of micro-batches and
-    after the availableNow drain equals the batch query exactly on the
-    exact-counter columns (asserted in tests/test_streaming.py, single-
-    and split-file layouts).
+    like stream_drift_monitor's counts. The update-mode aggregation emits
+    the FULL new totals for each changed day, so the fold replaces
+    changed days — the standing table is correct after any number of
+    micro-batches and after the availableNow drain equals the batch query
+    exactly on the exact-counter columns (asserted in
+    tests/test_streaming.py: single-file, split-file and TIMESTAMP(NANOS)
+    layouts).
 
     Distinct users per day — which countDistinct cannot provide in a
     streaming aggregation (it needs per-user state) — ships as a
@@ -500,45 +420,21 @@ def stream_completeness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate is read off the standing table (``n_users_approx``,
     within-5%-of-exact asserted in tests). State is O(days) —
     independent of stream length."""
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string"
-    )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
     from boxoffice_spark.queries.quality import completeness_counters
 
-    # counter expressions are SHARED with the batch twin (one definition
-    # in queries/quality.py) so stream and batch can never drift
-    daily = raw.groupBy(F.to_date("ts").alias("day")).agg(
-        *completeness_counters(),
-        F.count("value").alias("_n_value_present"),
-        F.hll_sketch_agg("user_id").alias("_users_sketch"),
+    # counter expressions and the ratio6 completeness cell are SHARED with
+    # the batch twin (queries/quality.py) so stream and batch can never drift
+    daily = (
+        _table_stream(spark, sf_dir, "events", max_files=1)
+        .groupBy(F.to_date("ts").alias("day"))
+        .agg(
+            *completeness_counters(),
+            F.count("value").alias("_n_value_present"),
+            F.hll_sketch_agg("user_id").alias("_users_sketch"),
+        )
     )
-    name = "s_complete_" + uuid.uuid4().hex[:12]
-
-    def emit(update: DataFrame, batch_id: int) -> None:
-        s = update.sparkSession
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            prev = s.table(f"global_temp.{name}")
-            merged = prev.join(update.select("day"), "day", "left_anti").unionByName(update)
-        else:
-            merged = update
-        merged.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        daily.writeStream.outputMode("update")
-        .foreachBatch(emit)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = (
-        spark.table(f"global_temp.{name}")
+    return (
+        _fold(daily, _replace_by("day"), "update")
         .select(
             "day",
             "n_events",
@@ -546,15 +442,11 @@ def stream_completeness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_nonpos_value",
             "n_empty_props",
             "n_error_events",
-            F.round(
-                F.col("_n_value_present").cast("double") / F.col("n_events"), 6
-            ).alias("value_completeness"),
+            ratio6("_n_value_present", "n_events").alias("value_completeness"),
             F.hll_sketch_estimate("_users_sketch").alias("n_users_approx"),
         )
         .localCheckpoint()
     )
-    spark.catalog.dropGlobalTempView(name)
-    return out
 
 
 def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -564,10 +456,10 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate work is batch x seen-so-far — standing x standing pairs are
     never regenerated), and the standing component labeling absorbs the
     new pairs through operators/graph.incremental_components' quotient-
-    graph merge. State is two driver-anchored tables — fingerprints
-    (O(docs), 8 bytes each) and labels (O(clustered docs)) — never the
-    pair graph, and the iterative merge each batch runs on a super-graph
-    with one node per AFFECTED cluster.
+    graph merge. State is two tables — labels (O(clustered docs)) and
+    fingerprints (O(docs), 8 bytes each) — never the pair graph, and the
+    iterative merge each batch runs on a super-graph with one node per
+    AFFECTED cluster.
 
     After the availableNow drain the final labeling equals
     t_dedup_clusters' from-scratch output exactly, label for label
@@ -575,8 +467,7 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying pair is generated exactly when its later endpoint arrives,
     an intra-cluster duplicate pair is a no-op in the merge, and the
     quotient merge preserves min-labels — so the fixpoint is order-
-    independent. The same foreachBatch global-temp-view handoff (and
-    explicit existence check) as stream_drift_monitor.
+    independent.
     """
     from boxoffice_spark.operators.dedup import (
         SIMHASH_MAX_HAMMING,
@@ -585,41 +476,22 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from boxoffice_spark.operators.graph import incremental_components
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .select("doc_id", "text")
-    )
-    name = "s_clusters_" + uuid.uuid4().hex[:12]
-    fp_name = name + "_fp"
-
-    def postings_of(sh: DataFrame) -> DataFrame:
-        # shared chunking expression (operators/dedup.simhash_chunk_postings)
-        # so the streaming probe and the batch pair generator cannot drift
-        return simhash_chunk_postings(sh, ["doc_id"])
-
-    def merge_batch(update: DataFrame, batch_id: int) -> None:
-        s = update.sparkSession
-        bsh = simhash(update, "doc_id", "text").select("doc_id", "simhash").localCheckpoint()
-        if s.catalog.tableExists(f"global_temp.{fp_name}"):
-            standing_fp = s.table(f"global_temp.{fp_name}")
+    def step(prev, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+        bsh = simhash(batch, "doc_id", "text").select("doc_id", "simhash").localCheckpoint()
+        if prev is None:
+            labels = batch.sparkSession.createDataFrame([], "node long, cluster_id long")
+            union_fp = bsh
         else:
-            standing_fp = bsh.limit(0)
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            labels = s.table(f"global_temp.{name}")
-        else:
-            labels = s.createDataFrame([], "node long, cluster_id long")
+            labels, standing_fp = prev
+            union_fp = standing_fp.unionByName(bsh)
         # batch postings probe seen-so-far INCLUDING the batch itself, so
         # intra-batch pairs are caught; unordered dedup collapses the
-        # doubled intra-batch candidates
-        union_fp = standing_fp.unionByName(bsh)
+        # doubled intra-batch candidates. The chunking expression is shared
+        # with the batch pair generator (simhash_chunk_postings).
         cand = (
-            postings_of(bsh)
+            simhash_chunk_postings(bsh, ["doc_id"])
             .alias("a")
-            .join(postings_of(union_fp).alias("b"), ["_chunk", "_val"])
+            .join(simhash_chunk_postings(union_fp, ["doc_id"]).alias("b"), ["_chunk", "_val"])
             .filter(F.col("a.doc_id") != F.col("b.doc_id"))
             .select(
                 F.least("a.doc_id", "b.doc_id").alias("id_a"),
@@ -632,20 +504,11 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = cand.filter(
             F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))) <= SIMHASH_MAX_HAMMING
         ).select("id_a", "id_b")
-        new_labels = incremental_components(labels, pairs, "id_a", "id_b").localCheckpoint()
-        new_labels.createOrReplaceGlobalTempView(name)
-        union_fp.localCheckpoint().createOrReplaceGlobalTempView(fp_name)
+        return incremental_components(labels, pairs, "id_a", "id_b"), union_fp
 
-    q = (
-        raw.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(f"global_temp.{name}").localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    spark.catalog.dropGlobalTempView(fp_name)
-    return out.select(F.col("node").alias("doc_id"), "cluster_id")
+    docs = _table_stream(spark, sf_dir, "documents", max_files=1).select("doc_id", "text")
+    labels, _ = _fold(docs, step)
+    return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
 def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -654,8 +517,8 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (goods_event upsert cadence -> dimension history -> as-of read,
     movie_events_scraper.py feeding the dashboard's historical view):
     each micro-batch of signup change events is MERGED into a standing
-    validity-interval table via ``foreachBatch``, the algebraic MERGE
-    INTO a warehouse runs per CDC increment.
+    validity-interval table, the algebraic MERGE INTO a warehouse runs
+    per CDC increment.
 
     Per batch (a plain batch DataFrame inside foreachBatch):
 
@@ -684,16 +547,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    raw = _events_stream(spark, sf_dir, glob="events*.parquet", max_files=1)
-    changes = raw.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts", "event_id", F.col("value").alias("attr_value")
-    )
-    name = "s_scd2_" + uuid.uuid4().hex[:12]
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if not batch.head(1):
-            return
+    def step(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         nxt = F.lead("ts").over(w)
         frag = batch.select(
@@ -703,47 +557,39 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             nxt.isNull().alias("is_current"),
             "attr_value",
         )
+        if prev is None:
+            return frag
         firsts = batch.groupBy("user_id").agg(F.min("ts").alias("_first_ts"))
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            prev = s.table(f"global_temp.{name}")
-            open_rows = prev.filter(F.col("is_current"))
-            closed_now = (
-                open_rows.join(firsts, "user_id")
-                .select(
-                    "user_id",
-                    "valid_from",
-                    F.col("_first_ts").alias("valid_to"),
-                    F.lit(False).alias("is_current"),
-                    "attr_value",
-                )
-            )
-            untouched_open = open_rows.join(firsts, "user_id", "left_anti")
-            merged = (
-                prev.filter(~F.col("is_current"))
-                .unionByName(closed_now)
-                .unionByName(untouched_open)
-                .unionByName(frag)
-            )
-        else:
-            merged = frag
-        merged.localCheckpoint().createOrReplaceGlobalTempView(name)
+        open_rows = prev.filter(F.col("is_current"))
+        closed_now = open_rows.join(firsts, "user_id").select(
+            "user_id",
+            "valid_from",
+            F.col("_first_ts").alias("valid_to"),
+            F.lit(False).alias("is_current"),
+            "attr_value",
+        )
+        untouched_open = open_rows.join(firsts, "user_id", "left_anti")
+        return (
+            prev.filter(~F.col("is_current"))
+            .unionByName(closed_now)
+            .unionByName(untouched_open)
+            .unionByName(frag)
+        )
 
-    q = (
-        changes.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
+    changes = (
+        _table_stream(spark, sf_dir, "events", max_files=1)
+        .filter(F.col("event_type") == "signup")
+        .select("user_id", "ts", "event_id", F.col("value").alias("attr_value"))
     )
-    q.awaitTermination()
-    if not spark.catalog.tableExists(f"global_temp.{name}"):
+    dim = _fold(changes, step)
+    if dim is None:
         # feed had no change rows at all: an empty dimension, not an error
         return spark.createDataFrame(
             [],
             "user_id long, valid_from timestamp, valid_to timestamp, "
             "is_current boolean, attr_value double",
         )
-    out = spark.table(f"global_temp.{name}").localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    return out
+    return dim
 
 
 def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,7 +597,7 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incremental twin of the a_kmv_overlap estimator
     (operators/sketch): each micro-batch's distinct (type, element)
     hashes are unioned into a standing k-min sketch table and re-selected
-    down to k rows per group inside ``foreachBatch``.
+    down to k rows per group.
 
     The merge needs NO ordering contract at all — k-min selection is
     associative, commutative and idempotent (the k smallest of a union
@@ -773,31 +619,18 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from boxoffice_spark.operators.sketch import kmv_estimate, kmv_hash, kmv_kmin
 
     k = 64
-    raw = _events_stream(spark, sf_dir, glob="events*.parquet", max_files=1)
-    name = "s_kmv_" + uuid.uuid4().hex[:12]
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def step(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         upd = batch.select(
             F.col("event_type"),
-            kmv_hash(
-                F.concat_ws(":", F.col("user_id"), F.to_date("ts"))
-            ).alias("h"),
+            kmv_hash(F.concat_ws(":", F.col("user_id"), F.to_date("ts"))).alias("h"),
         ).distinct()
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            upd = s.table(f"global_temp.{name}").unionByName(upd).distinct()
-        kmv_kmin(upd, ["event_type"], "h", k).localCheckpoint(
-        ).createOrReplaceGlobalTempView(name)
+        if prev is not None:
+            upd = prev.unionByName(upd).distinct()
+        return kmv_kmin(upd, ["event_type"], "h", k)
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sk = spark.table(f"global_temp.{name}")
-    out = (
+    sk = _fold(_table_stream(spark, sf_dir, "events", max_files=1), step)
+    return (
         sk.groupBy("event_type")
         .agg(F.count("*").alias("n_sketch"), F.max("h").alias("kth_hash"))
         .select(
@@ -811,14 +644,12 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type")
         .localCheckpoint()
     )
-    spark.catalog.dropGlobalTempView(name)
-    return out
 
 
 def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the first-order Markov transition matrix —
     the incremental twin of w_event_transitions. Two pieces of standing
-    state in ``foreachBatch``:
+    state:
 
     1. the transition COUNTS table (from_type, to_type, n) — counts are
        additive, so per-batch increments merge by summation;
@@ -840,18 +671,10 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural applyInPandasWithState / MERGE INTO keyed store."""
     from pyspark.sql import Window
 
-    raw = _events_stream(spark, sf_dir, glob="events*.parquet", max_files=1)
-    ev = raw.select("user_id", "ts", "event_id", "event_type")
-    cname = "s_trans_counts_" + uuid.uuid4().hex[:12]
-    lname = "s_trans_last_" + uuid.uuid4().hex[:12]
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if not batch.head(1):
-            return
+    def step(prev, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         wd = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-        within = (
+        increments = (
             batch.select(
                 "user_id",
                 F.col("event_type").alias("from_type"),
@@ -861,51 +684,47 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("from_type", "to_type")
             .agg(F.count("*").alias("n"))
         )
-        firsts = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("user_id", F.col("event_type").alias("_first_type"))
-        )
         lasts = (
             batch.withColumn("_rn", F.row_number().over(wd))
             .filter(F.col("_rn") == 1)
             .select("user_id", "ts", "event_id", "event_type")
         )
-        if s.catalog.tableExists(f"global_temp.{lname}"):
-            standing_last = s.table(f"global_temp.{lname}")
-            boundary = (
-                standing_last.select(
-                    "user_id", F.col("event_type").alias("from_type")
-                )
-                .join(firsts, "user_id")
-                .groupBy("from_type", F.col("_first_type").alias("to_type"))
-                .agg(F.count("*").alias("n"))
-            )
-            increments = within.unionByName(boundary)
-            new_last = (
-                standing_last.join(lasts.select("user_id"), "user_id", "left_anti")
-                .unionByName(lasts)
-            )
-        else:
-            increments = within
-            new_last = lasts
-        if s.catalog.tableExists(f"global_temp.{cname}"):
-            increments = s.table(f"global_temp.{cname}").unionByName(increments)
-        counts = increments.groupBy("from_type", "to_type").agg(
-            F.sum("n").alias("n")
+        if prev is None:
+            return increments, lasts
+        counts, standing_last = prev
+        firsts = (
+            batch.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("user_id", F.col("event_type").alias("_first_type"))
         )
-        counts.localCheckpoint().createOrReplaceGlobalTempView(cname)
-        new_last.localCheckpoint().createOrReplaceGlobalTempView(lname)
+        boundary = (
+            standing_last.select("user_id", F.col("event_type").alias("from_type"))
+            .join(firsts, "user_id")
+            .groupBy("from_type", F.col("_first_type").alias("to_type"))
+            .agg(F.count("*").alias("n"))
+        )
+        counts = (
+            counts.unionByName(increments)
+            .unionByName(boundary)
+            .groupBy("from_type", "to_type")
+            .agg(F.sum("n").alias("n"))
+        )
+        new_last = standing_last.join(
+            lasts.select("user_id"), "user_id", "left_anti"
+        ).unionByName(lasts)
+        return counts, new_last
 
-    q = ev.writeStream.foreachBatch(merge_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-    if not spark.catalog.tableExists(f"global_temp.{cname}"):
+    ev = _table_stream(spark, sf_dir, "events", max_files=1).select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    state = _fold(ev, step)
+    if state is None:
         return spark.createDataFrame(
             [], "from_type string, to_type string, n_transitions long, p_transition double"
         )
-    counts = spark.table(f"global_temp.{cname}")
+    counts, _ = state
     norm = Window.partitionBy("from_type")
-    out = (
+    return (
         counts.select(
             "from_type",
             "to_type",
@@ -917,9 +736,6 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("from_type", "to_type")
         .localCheckpoint()
     )
-    spark.catalog.dropGlobalTempView(cname)
-    spark.catalog.dropGlobalTempView(lname)
-    return out
 
 
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -947,45 +763,24 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     phi = 0.02
     capacity = 50  # ceil(1 / phi)
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-    name = "s_hh_" + uuid.uuid4().hex[:12]
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def step(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         toks = batch.select(F.explode(TS.words_of("text")).alias("term"))
         upd = _mg_candidates(toks, "term", capacity).distinct()
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            upd = s.table(f"global_temp.{name}").unionByName(upd).distinct()
-        upd.localCheckpoint().createOrReplaceGlobalTempView(name)
+        return upd if prev is None else prev.unionByName(upd).distinct()
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not spark.catalog.tableExists(f"global_temp.{name}"):
-        # no matching files -> foreachBatch never fired; empty readout
-        # (same guard as the quantile/reconcile twins)
+    cands = _fold(_table_stream(spark, sf_dir, "documents", max_files=1), step)
+    if cands is None:
+        # no matching files -> no micro-batch ran; empty readout
         return spark.createDataFrame(
             [], "term string, term_count bigint, frac double"
         )
-    cands = spark.table(f"global_temp.{name}")
     corpus_toks = (
         spark.read.option("pathGlobFilter", "documents*.parquet")
         .parquet(sf_dir)
         .select(F.explode(TS.words_of("text")).alias("term"))
     )
-    out = exact_recount(corpus_toks, cands, "term", phi).localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    return out
+    return exact_recount(corpus_toks, cands, "term", phi).localCheckpoint()
 
 
 # Equi-width histogram contract for the streaming quantile sketch: bin
@@ -1064,9 +859,8 @@ def stream_quantile_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFra
     quantile sketches — the mergeable-quantile member of the sketch
     family (KMV distinct, HLL rollup, Misra-Gries heavy hitters, and now
     quantiles): each micro-batch's (type, bin) counts ADD into a standing
-    histogram inside ``foreachBatch``; p50/p95 read off the drained
-    histogram by cumulative interpolation with a hard two-bin-width error
-    bound (QH_ERR_BOUND).
+    histogram; p50/p95 read off the drained histogram by cumulative
+    interpolation with a hard two-bin-width error bound (QH_ERR_BOUND).
 
     Count addition is associative and commutative, so the drained
     histogram equals the batch-computed histogram EXACTLY for ANY file
@@ -1080,11 +874,8 @@ def stream_quantile_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFra
     a keyed histogram table that tomorrow's partition UNIONs into, which
     is what makes a quantile readout possible without ever re-sorting
     history — the streaming substitute for percentile() at 100 TB."""
-    raw = _events_stream(spark, sf_dir, glob="events*.parquet", max_files=1)
-    name = "s_qh_" + uuid.uuid4().hex[:12]
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def step(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         upd = (
             batch.select(
                 "event_type",
@@ -1093,70 +884,44 @@ def stream_quantile_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFra
             .groupBy("event_type", "bin")
             .agg(F.count("*").alias("cnt"))
         )
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            upd = (
-                s.table(f"global_temp.{name}")
-                .unionByName(upd)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        upd.localCheckpoint().createOrReplaceGlobalTempView(name)
+        if prev is None:
+            return upd
+        return (
+            prev.unionByName(upd)
+            .groupBy("event_type", "bin")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not spark.catalog.tableExists(f"global_temp.{name}"):
+    hist = _fold(_table_stream(spark, sf_dir, "events", max_files=1), step)
+    if hist is None:
         return spark.createDataFrame(
             [],
             "event_type string, n_rows long, n_bins long, est_p50 double, "
             "est_p95 double, err_bound double",
         )
-    hist = spark.table(f"global_temp.{name}")
-    out = quantile_hist_readout(hist).localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    return out
-
-
-# only the columns the job touches: parquet readStream prunes to the
-# user schema, and omitting l_shipdate sidesteps the fixture's
-# timestamp physical-type drift entirely (no ts logic here)
-_LINEITEM_STREAM_SCHEMA = (
-    "l_orderkey long, l_extendedprice double, l_discount double, "
-    "l_tax double"
-)
+    return quantile_hist_readout(hist).localCheckpoint()
 
 
 def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the header-vs-detail reconciliation
     (queries/quality.dq_order_lineitem_reconcile's twin): line items
     arrive as a file stream and each micro-batch's per-order detail
-    sums ADD into a standing (order, detail_decimal, n_lines) table
-    inside ``foreachBatch``; at drain the standing table joins the
-    header scan once and emits the identical bucket report. Decimal
-    addition is associative/commutative, so the drained per-order sums
-    — and therefore every bucket decision and money total — equal the
-    batch audit EXACTLY for ANY file split or arrival order (asserted
-    single- and multi-batch in tests/test_streaming.py). This is the
-    shape a continuous AP audit runs in production: detail feeds land
-    all day, the standing order-grain state is O(orders), and the
-    report reads off state instead of rescanning the detail history.
-    The per-line amount keeps the batch query's exactness contract
-    (exact 6dp rational, decimal-summed at scale 6; cents rounded in
-    DECIMAL space at readout)."""
-    raw = (
-        spark.readStream.schema(_LINEITEM_STREAM_SCHEMA)
-        .option("pathGlobFilter", "lineitem*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-    name = "s_rec_" + uuid.uuid4().hex[:12]
+    sums ADD into a standing (order, detail_decimal, n_lines) table; at
+    drain the standing table joins the header scan once and emits the
+    identical bucket report. Decimal addition is associative/commutative,
+    so the drained per-order sums — and therefore every bucket decision
+    and money total — equal the batch audit EXACTLY for ANY file split or
+    arrival order (asserted single- and multi-batch in
+    tests/test_streaming.py). This is the shape a continuous AP audit runs
+    in production: detail feeds land all day, the standing order-grain
+    state is O(orders), and the report reads off state instead of
+    rescanning the detail history. The per-line amount keeps the batch
+    query's exactness contract (exact 6dp rational, decimal-summed at
+    scale 6; cents rounded in DECIMAL space at readout). The stream reads
+    only the four lineitem columns it needs, so the fixture's l_shipdate
+    timestamp type never matters here."""
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def step(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         upd = batch.groupBy("l_orderkey").agg(
             F.sum(
                 (
@@ -1167,34 +932,20 @@ def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("li_dec"),
             F.count("*").alias("n_lines"),
         )
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            upd = (
-                s.table(f"global_temp.{name}")
-                .unionByName(upd)
-                .groupBy("l_orderkey")
-                .agg(
-                    F.sum("li_dec").alias("li_dec"),
-                    F.sum("n_lines").alias("n_lines"),
-                )
-            )
-        upd.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from boxoffice_spark.tables import table as _table
-
-    o = _table(spark, sf_dir, "orders")
-    if spark.catalog.tableExists(f"global_temp.{name}"):
-        li = spark.table(f"global_temp.{name}").select(
-            "l_orderkey", F.col("li_dec").cast("double").alias("li_total")
+        if prev is None:
+            return upd
+        return (
+            prev.unionByName(upd)
+            .groupBy("l_orderkey")
+            .agg(F.sum("li_dec").alias("li_dec"), F.sum("n_lines").alias("n_lines"))
         )
-    else:
+
+    state = _fold(_table_stream(spark, sf_dir, "lineitem", max_files=1), step)
+    if state is None:
         li = spark.createDataFrame([], "l_orderkey long, li_total double")
+    else:
+        li = state.select("l_orderkey", F.col("li_dec").cast("double").alias("li_total"))
+    o = tables.table(spark, sf_dir, "orders")
     j = o.join(li, o.o_orderkey == li.l_orderkey, "left")
     gap = F.abs(F.col("o_totalprice") - F.col("li_total"))
     bucket = (
@@ -1203,7 +954,7 @@ def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(gap <= 0.10 * F.col("o_totalprice"), "within_10pct")
         .otherwise("gap_over_10pct")
     )
-    out = (
+    return (
         j.select(
             F.col("o_orderstatus").alias("status"),
             bucket.alias("bucket"),
@@ -1230,6 +981,3 @@ def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("status", "bucket")
         .localCheckpoint()
     )
-    if spark.catalog.tableExists(f"global_temp.{name}"):
-        spark.catalog.dropGlobalTempView(name)
-    return out

@@ -23,6 +23,9 @@ changed fingerprint, or a path ``os.stat`` cannot see, is an ordinary
 inferring read. The cache belongs to one session: a new session (or
 ``newSession()``, whose parquet confs may differ) starts empty.
 DataFrames are not cached — a ``Dataset`` pins its file index and plan.
+``table_schema`` reads the cached output schema and ``table_read_schema``
+the parquet read schema underneath it, which a file stream over the
+table declares (streaming/jobs.py).
 """
 
 from __future__ import annotations
@@ -154,6 +157,20 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
     (no Spark job); a miss is one ``table()`` call."""
     _, hit = _cached(spark, f"{sf_dir}/{name}.parquet")
     return hit[2] if hit is not None else table(spark, sf_dir, name).schema
+
+
+def table_read_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The parquet schema ``table()`` reads with, before its ingestion
+    rule: what a file stream over the table must declare (streaming/
+    jobs.py applies ``_ingest`` to that stream). From the session's cache
+    (no Spark job); a miss is one ``table()`` call, which also sets the
+    parquet conf a TIMESTAMP(NANOS) footer needs."""
+    path = f"{sf_dir}/{name}.parquet"
+    _, hit = _cached(spark, path)
+    if hit is None:
+        table(spark, sf_dir, name)
+        _, hit = _cached(spark, path)
+    return hit[1] if hit is not None else spark.read.parquet(path).schema
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

@@ -828,3 +828,100 @@ def test_stream_reconcile_multi_batch_any_split(spark, sf_dir, tmp_path):
         map(tuple, dq_order_lineitem_reconcile(spark, sf_dir).collect())
     )
     assert got == want and len(got) > 0
+
+
+def test_stream_completeness_nanos_fixture(spark, sf_dir, tmp_path):
+    """A TIMESTAMP(NANOS) events file: the stream reads with the schema
+    and ts rule tables.table() uses, so it still equals the batch twin
+    (regression: a private ``ts timestamp`` stream schema could not
+    convert int64 nanos). A new session keeps the nanosAsLong conf flip
+    out of the shared one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from boxoffice_spark.queries.quality import dq_completeness_by_day
+    from boxoffice_spark.streaming.jobs import stream_completeness_monitor
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(
+        t, str(tmp_path / "events.parquet"), version="2.6", coerce_timestamps=None
+    )
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type == pa.timestamp("ns")
+
+    s = spark.newSession()
+    cols = [
+        "day", "n_events", "n_null_value", "n_nonpos_value",
+        "n_empty_props", "n_error_events", "value_completeness",
+    ]
+    got = sorted(map(tuple, stream_completeness_monitor(s, str(tmp_path)).select(*cols).collect()))
+    want = sorted(map(tuple, dq_completeness_by_day(s, str(tmp_path)).select(*cols).collect()))
+    assert got == want and len(got) > 0
+
+
+def test_stream_drift_monitor_null_lang_across_batches(spark, sf_dir, tmp_path):
+    """NULL lang in both of two micro-batches: the drained PSI table must
+    equal psi_drift_terms over the same files, with ONE NULL-lang row
+    (regression: an anti-join merge never matches a NULL key, so each
+    batch and the static corpus left their own NULL row, and the extra
+    rows skewed every language's denominators)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from boxoffice_spark.queries.quality import psi_drift_terms
+    from boxoffice_spark.streaming.jobs import stream_drift_monitor
+
+    t = pq.read_table(f"{sf_dir}/documents.parquet")
+    langs = [
+        None if d % 7 == 0 else lang
+        for d, lang in zip(t["doc_id"].to_pylist(), t["lang"].to_pylist())
+    ]
+    t = t.set_column(t.schema.get_field_index("lang"), "lang", pa.array(langs, pa.string()))
+    cut = t.num_rows // 2
+    pq.write_table(t.slice(0, cut), str(tmp_path / "documents.parquet"))
+    pq.write_table(t.slice(cut), str(tmp_path / "documents_2.parquet"))
+    _pin_file_order(tmp_path / "documents.parquet", tmp_path / "documents_2.parquet")
+
+    got = sorted(map(tuple, stream_drift_monitor(spark, str(tmp_path)).collect()), key=repr)
+    full = spark.read.option("pathGlobFilter", "documents*.parquet").parquet(str(tmp_path))
+    want = sorted(map(tuple, psi_drift_terms(full).collect()), key=repr)
+    assert got == want
+    null_rows = [r for r in want if r[0] is None]
+    assert len(null_rows) == 1 and null_rows[0][1] > 0 and null_rows[0][2] > 0
+
+
+def test_failed_fold_leaves_no_global_temp_views(spark, sf_dir, tmp_path):
+    """A fold whose second micro-batch fails (an events file whose
+    event_type is int64, unreadable under the stream schema) must raise
+    and leave the global_temp catalog exactly as it found it — no
+    checkpointed standing state left behind."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from boxoffice_spark.streaming.jobs import (
+        stream_event_transitions,
+        stream_kmv_sketch_merge,
+        stream_quantile_histogram_merge,
+    )
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    pq.write_table(t, str(tmp_path / "events.parquet"))
+    bad = t.set_column(
+        t.schema.get_field_index("event_type"),
+        "event_type",
+        pa.array(range(t.num_rows), pa.int64()),
+    )
+    pq.write_table(bad, str(tmp_path / "events_2.parquet"))
+    _pin_file_order(tmp_path / "events.parquet", tmp_path / "events_2.parquet")
+
+    def views():
+        return sorted(v.name for v in spark.catalog.listTables("global_temp"))
+
+    for job in (stream_kmv_sketch_merge, stream_quantile_histogram_merge, stream_event_transitions):
+        before = views()
+        with pytest.raises(StreamingQueryException):
+            job(spark, str(tmp_path))
+        assert views() == before, job.__name__

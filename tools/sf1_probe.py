@@ -21,7 +21,7 @@ computing, and min() would report cache-scan growth rather than compute
 growth (hiding superlinear work upstream of a persist). Run 1 still
 warms JIT/codegen, which is what min-of-2 is for.
 
-Inflation preserves workload character (same rules as tools/scale_probe.py):
+Inflation preserves workload character:
 - documents: vowel-rotated text per copy -> distinct shingles, postings grow
   linearly, pair output stays bounded. n_chars is length-preserving.
 - embeddings: the vector is cyclically rotated per copy -> copies are
@@ -30,7 +30,7 @@ Inflation preserves workload character (same rules as tools/scale_probe.py):
 - dimension/other tables copied verbatim.
 
 Usage:
-    python tools/sf1_probe.py [--oracle] [--oracle-only] [--regen]
+    python tools/sf1_probe.py [--oracle] [--oracle-only] [--regen] [--all | --only=a,b]
 Env: SPARK_GRAFT_SF1_DIR (default /tmp/spark_graft_sf1),
      SPARK_GRAFT_SF_DIR (sf0.1 source, default /root/testdata/sf0.1)
 Prints one JSON line:
